@@ -69,9 +69,12 @@ object ConnectedComponents {
     * under the INPUT frame's session (the caller's normal conf — right for
     * the often-expensive edge derivation); the rewrapped leaf is rooted in
     * `target` so every later read plans under the loop session's conf.
+    * The flag is true when the result is CC's own snapshot: a caller's
+    * already-materialized frame passes through and must never be freed
+    * here.
     */
   private def snapIn(
-      target: org.apache.spark.sql.SparkSession, df: DataFrame): DataFrame =
+      target: org.apache.spark.sql.SparkSession, df: DataFrame): (DataFrame, Boolean) =
     // skip the checkpoint when the input is already storage-backed (a
     // caller-side snap under trivial renames/casts — the contracted-merge
     // edge frame, the cross-snapshot keyed projections): re-checkpointing
@@ -80,10 +83,10 @@ object ConnectedComponents {
     // Non-materialized (or non-trivially projected) inputs keep the full
     // snap — an expensive derivation must never execute once per read.
     if (org.apache.spark.sql.graft.shims.cheapOverMaterialized(df))
-      org.apache.spark.sql.graft.shims.realStatsIn(target, df)
+      (org.apache.spark.sql.graft.shims.realStatsIn(target, df), false)
     else
-      org.apache.spark.sql.graft.shims.realStatsIn(
-        target, org.apache.spark.sql.graft.shims.snap(df))
+      (org.apache.spark.sql.graft.shims.realStatsIn(
+        target, org.apache.spark.sql.graft.shims.snap(df)), true)
 
   /** Labels every node in `nodes` (column `id`) with the minimum id
     * reachable through `edges` (columns `src`, `dst`; undirected, self-loops
@@ -135,7 +138,10 @@ object ConnectedComponents {
     // (The checkpoint job itself runs under the caller's normal adaptive
     // conf — only the loop's fixed-shape plans opt out.) The symmetrized
     // view stays lazy — re-scanning a checkpoint is cheap.
-    val ep = snapIn(loop, edges
+    // (the projected input frame is never held in a local: it must become
+    // unreachable as soon as the snap is taken, so its broadcast and
+    // shuffle state is cleaned during the loop, not after the call)
+    val (ep, ownsEp) = snapIn(loop, edges
       .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v")))
     val sym = ep.union(ep.select(col("v").as("u"), col("u").as("v")))
     // size the loop's shuffles to the MEASURED edge bytes (the same ~64 MB
@@ -158,7 +164,7 @@ object ConnectedComponents {
     // snapped ONCE: the seed union below and the final output semi-join
     // both read `ids`, and an expensive caller-side node derivation must
     // not pay its cost twice (the edge plan gets the same treatment above)
-    val ids = snapIn(loop, nodes.select(col("id").cast("long").as("id")))
+    val (ids, ownsIds) = snapIn(loop, nodes.select(col("id").cast("long").as("id")))
     // round-1 propagation fused into initialization: one union + aggregate
     // over nodes ∪ edge endpoints IS min(id, min neighbor id) — seeding
     // from the endpoint union (not just `nodes`) is what makes absent
@@ -166,7 +172,7 @@ object ConnectedComponents {
     // least() skips the null that edgeless nodes contribute.
     var labels = snapIn(loop, ids.select(col("id"), lit(null).cast("long").as("v"))
       .union(sym.select(col("u").as("id"), col("v")))
-      .groupBy("id").agg(least(col("id"), min(col("v"))).as("lab")))
+      .groupBy("id").agg(least(col("id"), min(col("v"))).as("lab")))._1
     var round = 0
     var converged = false
     // artifacts superseded LAST round (each round's materialized levels
@@ -328,15 +334,15 @@ object ConnectedComponents {
           .select(col("id"), col("lab").as("component")))
     } finally {
       // everything except the returned final level is dead on BOTH paths:
-      // the edge checkpoint (usually the largest artifact, O(|E|) rows)
+      // the edge checkpoint CC made (usually the largest artifact, O(|E|) rows)
       // and the last superseded label level. On the failure path the final
       // labels level and the ids snap are dead too. The loop session needs
       // no teardown — its conf dies with it and its cached state is shared.
       // (the final lastProp backs the returned labels level — the same
       // materialized propagation — so it is only freed on failure)
       prevRound.foreach(free)
-      free(ep)
-      if (!done) { free(labels); lastProp.foreach(free); free(ids) }
+      if (ownsEp) free(ep)
+      if (!done) { free(labels); lastProp.foreach(free); if (ownsIds) free(ids) }
     }
   }
 }

@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions.col
   *   - zstd compression (gzip as an option — the reference's runtime codec
   *     probe, `pyarrow/main.py:125-133`, is unnecessary: Spark bundles zstd);
   *   - 1 MB uncompressed data pages (`pyarrow/main.py:145`);
-  *   - no INT96 timestamps (Spark default `TIMESTAMP_MICROS`);
+  *   - timestamps in the session's `spark.sql.parquet.outputTimestampType`,
+  *     left unset here, so coerced `_dt` columns land as Spark's default
+  *     INT96 (readers still see timestamps; switching to INT64 changes
+  *     the converted bytes);
   *   - optionally a single output file named by the caller
   *     (`<stem>.zst.parquet` key mapping lives in [[graft.pipeline.ConvertJob]]).
   *

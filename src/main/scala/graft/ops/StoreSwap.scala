@@ -64,16 +64,20 @@ object StoreSwap {
     if (!fs.exists(m)) fs.create(m).close()
   }
 
-  /** `_SUCCESS`-committed check through the directory's OWN FileSystem
-    * (the r13-advice discipline generalized): `java.nio` only sees the
-    * local filesystem, so a bootstrap/committed probe built on it reads
-    * "absent" for every HDFS/object-store deployment — which silently
-    * re-bootstraps over a live store. Shared by every production-path
-    * existence check (stream bootstraps, optional-artifact probes).
+  /** Committed check through the directory's OWN FileSystem (the
+    * r13-advice discipline generalized): every named marker (relative to
+    * `dir`; `_SUCCESS` when none is named) exists. `java.nio` only sees
+    * the local filesystem, so a bootstrap/committed probe built on it
+    * reads "absent" for every HDFS/object-store deployment — which
+    * silently re-bootstraps over a live store. Shared by every
+    * production-path existence check (stream bootstraps, optional-artifact
+    * probes, warm-store readiness).
     */
-  def committed(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  def committed(spark: SparkSession, dir: String, markers: String*): Boolean = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (if (markers.isEmpty) Seq("_SUCCESS") else markers)
+      .forall(m => fs.exists(new org.apache.hadoop.fs.Path(d, m)))
   }
 
   /** Replace `path` with `path + ".next"` via rename-aside (see object

@@ -656,16 +656,10 @@ object Curation {
     * store is never served).
     */
   private def windowStoreFor(
-      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_k$k" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      windowStore(base, k).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = {
+    val s = base.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "ngram_store", dir, s"_k$k"))(
+      windowStore(base, k))
   }
 
   /** [[windowStoreFor]]'s twin for the XXH64-hashed store (q133); the
@@ -673,16 +667,10 @@ object Curation {
     * each other.
     */
   private def hashedWindowStoreFor(
-      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_k${k}_xxh" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      hashedWindowStore(base, k).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+      base: org.apache.spark.sql.DataFrame, dir: String, k: Int = 5): String = {
+    val s = base.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "ngram_store", dir, s"_k${k}_xxh"))(
+      hashedWindowStore(base, k))
   }
 
   /** The REFCOUNTED window store — the retractable variant of
@@ -830,17 +818,11 @@ object Curation {
       docs: org.apache.spark.sql.DataFrame,
       dir: String,
       hashed: Boolean,
-      k: Int = 5): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      (if (hashed) "_rcxfull" else "_rcfull") + s"_k$k" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      rcStoreOf(docs, k, hashed).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+      k: Int = 5): String = {
+    val s = docs.sparkSession
+    val key = (if (hashed) "_rcxfull" else "_rcfull") + s"_k$k"
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "ngram_store", dir, key))(
+      rcStoreOf(docs, k, hashed))
   }
 
   /** Scheduled maintenance rewrite for a refcounted store (the
@@ -1136,27 +1118,16 @@ object Curation {
       .groupBy("source", "score").agg(count(lit(1)).as("n"))
   }
 
-  /** Artifact path for a corpus dir's quality histogram — kernel-versioned
-    * like [[graft.queries.DedupStore.indexPathFor]] so a score-definition change
-    * can never warm-reuse an incompatible artifact.
-    */
-  def histogramPathFor(dir: String, kernelVersion: Int = 1): String =
-    s"${sys.props("java.io.tmpdir")}/graft_qhist_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_v$kernelVersion"
-
   /** One-time day-N histogram materialization (content-keyed warm reuse —
-    * the [[graft.queries.DedupStore]] band-index policy verbatim).
+    * the [[graft.queries.DedupStore]] band-index policy verbatim). The
+    * `_v1` key is the score kernel's version, like
+    * [[graft.queries.DedupStore.indexPathFor]]'s, so a score-definition
+    * change can never warm-reuse an incompatible artifact.
     */
   private def histogramIndexFor(
-      base: org.apache.spark.sql.DataFrame, dir: String): String = synchronized {
-    val path = histogramPathFor(dir) +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      scoreHistogram(base).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+      base: org.apache.spark.sql.DataFrame, dir: String): String = {
+    val s = base.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "qhist", dir, "_v1"))(scoreHistogram(base))
   }
 
   /** Warm-reusable FULL-corpus histogram store at the ABSORBED state —
@@ -1169,15 +1140,9 @@ object Curation {
     * and LifecycleSpec).
     */
   private def histogramFullIndexFor(
-      docs: org.apache.spark.sql.DataFrame, dir: String): String = synchronized {
-    val path = histogramPathFor(dir) + "_full" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      scoreHistogram(docs).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+      docs: org.apache.spark.sql.DataFrame, dir: String): String = {
+    val s = docs.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "qhist", dir, "_v1_full"))(scoreHistogram(docs))
   }
 
   /** ABSORB a batch into a stored [[scoreHistogram]] artifact — q121's
@@ -2591,14 +2556,9 @@ object Curation {
         "append, day-2 batch novelty against the grown store",
       NoveltyOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val path = s"${sys.props("java.io.tmpdir")}/graft_ngram_store_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_absorb_k5_pid" +
-        ProcessHandle.current().pid()
+      val path = WarmStores.pathFor("ngram_store", dir, "_absorb_k5" + WarmStores.pidTag)
       Curation.synchronized {
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-          windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .option("compression", "zstd").parquet(path)
+        WarmStores.warmParquet(s, path)(windowStore(docs.filter(pmod(col("doc_id"), lit(5)) > 1)))
         appendToWindowStore(s, docs.filter(pmod(col("doc_id"), lit(5)) === 1), path)
       }
       contentNovelty(

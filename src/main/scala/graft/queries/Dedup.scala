@@ -80,15 +80,13 @@ object Dedup {
     * their own pid, the oracle SQL interpolates the same val, and the
     * driver replays DuckDB in-process with the Verify pid's file on disk.
     */
-  private val q183Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q183_pid${ProcessHandle.current().pid()}"
+  private val q183Dir: String = WarmStores.pidDir("q183")
 
   /** q34's pid-scoped simhash dump root (the q183/q185 convention): the
     * (doc_id, sim) hash rows dump here and BOTH engines replay banding +
     * band equi-join + hamming verify over the same readback.
     */
-  private val q34Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q34_pid${ProcessHandle.current().pid()}"
+  private val q34Dir: String = WarmStores.pidDir("q34")
 
   /** q107's pid-scoped dump root: the chunk table AND the chunk band
     * table dump, and BOTH engines replay candidates → verify → fold →
@@ -101,8 +99,7 @@ object Dedup {
     * it is scale-factor-robust; banding recall stays a spec/gauge
     * question — MinHashRecallSpec, q144 — not an oracle assumption.)
     */
-  private val q107Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q107_pid${ProcessHandle.current().pid()}"
+  private val q107Dir: String = WarmStores.pidDir("q107")
 
   def minhashBands(docs: DataFrame): DataFrame =
     docs.select(

@@ -264,7 +264,10 @@ object DedupStore {
   }
 
   private[graft] def manifestSubdir(indexPath: String, threshold: Double): String =
-    s"$indexPath/manifest_bp${math.round(threshold * 10000)}"
+    s"$indexPath/${manifestName(threshold)}"
+
+  private def manifestName(threshold: Double): String =
+    s"manifest_bp${math.round(threshold * 10000)}"
 
   /** The shared core of the incremental paths (q110/q112): CC over the
     * CONTRACTED merge graph — batch ids + touched stored representatives,
@@ -841,24 +844,13 @@ object DedupStore {
     * (q147): gid-keyed band index + component manifest. The store is a
     * pure function of the read-only corpus dir and is NEVER mutated by
     * its consumer (q147's merge is a probe, not an absorb), so the
-    * [[bandIndexFor]] testdata warm-reuse policy applies; the `_snap01`
+    * [[bandIndexFor]] content-keyed warm-reuse policy applies; the `_snap01`
     * suffix keeps it from ever serving the plain-corpus index (different
     * key space) and [[indexPathFor]]'s fingerprint carries the banding
     * params.
     */
-  private def snapshotStoreFor(
-      docs01: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_snap01" +
-      WarmStores.dirTag(docs01.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
-      persistBandIndex(docs01, path)
-      persistComponents(docs01, path, threshold)
-    }
-    path
-  }
+  private def snapshotStoreFor(docs01: DataFrame, dir: String, threshold: Double): String =
+    componentStoreFor(docs01, dir, "_snap01", threshold)
 
   /** The registered three-snapshot derivation (q146/SnapshotDedupSpec):
     * q132's change conventions over the corpus, shared so the spec folds
@@ -886,18 +878,8 @@ object DedupStore {
     * mutated by its consumer: [[retractManifest]] is a probe.
     */
   private[queries] def fullComponentIndexFor(
-      docs: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_full" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
-      persistBandIndex(docs, path)
-      persistComponents(docs, path, threshold)
-    }
-    path
-  }
+      docs: DataFrame, dir: String, threshold: Double): String =
+    componentStoreFor(docs, dir, "_full", threshold)
 
   /** Warm-reusable gid-keyed store at the ABSORBED state — band index +
     * component manifest over all three derived snapshots (q158's store:
@@ -907,18 +889,20 @@ object DedupStore {
     * retraction is a [[retractManifest]] probe.
     */
   private def snapshotFullIndexFor(
-      docs: DataFrame, dir: String, threshold: Double): String = synchronized {
-    val path = indexPathFor(dir) + "_snapfull" +
-      WarmStores.dirTag(docs.sparkSession, dir, "documents")
-    val sub = manifestSubdir(path, threshold)
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS") &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) {
-      persistBandIndex(docs, path)
-      persistComponents(docs, path, threshold)
+      docs: DataFrame, dir: String, threshold: Double): String =
+    componentStoreFor(docs, dir, "_snapfull", threshold)
+
+  /** A band index + component manifest built together as one warm
+    * artifact at the `suffix`-keyed index path (the never-mutated stores
+    * above); both must be complete to serve.
+    */
+  private def componentStoreFor(
+      docs: DataFrame, dir: String, suffix: String, threshold: Double): String =
+    WarmStores.warm(docs.sparkSession, keyedIndexPath(docs, dir, suffix),
+        "shingles/_SUCCESS", manifestName(threshold) + "/_SUCCESS") { p =>
+      persistBandIndex(docs, p)
+      persistComponents(docs, p, threshold)
     }
-    path
-  }
 
   /** Artifact location for a corpus dir's band index, fingerprinted by
     * EVERY parameter the stored bytes depend on — the same staleness rule
@@ -936,9 +920,12 @@ object DedupStore {
       rowsPerBand: Int = RowsPerBand,
       kernelVersion: Int = KernelVersion): String = {
     val fp = s"k${k}p${numPerm}b${numBands}r${rowsPerBand}v$kernelVersion"
-    s"${sys.props("java.io.tmpdir")}/graft_band_index_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" + fp
+    WarmStores.pathFor("band_index", dir, "_" + fp)
   }
+
+  /** [[indexPathFor]] plus `suffix`, keyed by the corpus content. */
+  private def keyedIndexPath(corpus: DataFrame, dir: String, suffix: String = ""): String =
+    indexPathFor(dir) + suffix + WarmStores.dirTag(corpus.sparkSession, dir, "documents")
 
   /** One-time band-index materialization per corpus dir — the q66 analogue
     * of [[Similarity]]'s persistedIndex rules: index build ≠ query (an
@@ -950,38 +937,30 @@ object DedupStore {
     * instead of serving stale bands, and an unchanged dir warm-serves
     * across calls and JVM restarts.
     */
-  private[queries] def bandIndexFor(corpus: DataFrame, dir: String): String = synchronized {
-    val path = indexPathFor(dir) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "shingles/_SUCCESS")
-    if (!reusable) persistBandIndex(corpus, path)
-    path
-  }
+  private[queries] def bandIndexFor(corpus: DataFrame, dir: String): String =
+    WarmStores.warm(corpus.sparkSession, keyedIndexPath(corpus, dir), "shingles/_SUCCESS")(
+      persistBandIndex(corpus, _))
 
-  /** [[bandIndexFor]] plus the day-N component assignment (same warm-reuse
-    * policy; the threshold rides the subdirectory name so an incompatible
-    * assignment can never be served — see [[persistComponents]]).
-    */
   /** [[bandIndexFor]]'s warm-reuse policy for the exact-fingerprint
     * artifact (fingerprint = plain md5, parameterless — the banding
     * fingerprint suffix in the path is irrelevant to it but harmless).
+    * It lands beside the band index, in the same root.
     */
-  private[queries] def exactIndexFor(corpus: DataFrame, dir: String): String = synchronized {
-    val path = indexPathFor(dir) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "exact_fp/_SUCCESS")
-    if (!reusable) persistExactIndex(corpus, path)
-    path
-  }
+  private[queries] def exactIndexFor(corpus: DataFrame, dir: String): String =
+    WarmStores.warm(corpus.sparkSession, keyedIndexPath(corpus, dir), "exact_fp/_SUCCESS")(
+      persistExactIndex(corpus, _))
 
+  /** [[bandIndexFor]] plus the day-N component assignment (same warm-reuse
+    * policy; the threshold rides the subdirectory name so an incompatible
+    * assignment can never be served — see [[persistComponents]]). The
+    * manifest is a sub-artifact published beside the bands.
+    */
   private[queries] def componentIndexFor(
-      corpus: DataFrame, dir: String, threshold: Double): String = synchronized {
+      corpus: DataFrame, dir: String, threshold: Double): String = {
     val path = bandIndexFor(corpus, dir)
-    val sub = manifestSubdir(path, threshold)
-    val reusable =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(sub, "_SUCCESS"))
-    if (!reusable) persistComponents(corpus, path, threshold)
-    path
+    WarmStores.warm(corpus.sparkSession, path,
+        manifestName(threshold) + "/_SUCCESS")(
+      persistComponents(corpus, _, threshold))
   }
 
   /** q66's oracle: exact pairs restricted to those touching the batch
@@ -1090,7 +1069,7 @@ object DedupStore {
       incrementalOracleSql) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val src = bandIndexFor(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), dir)
-      val dst = src + "_compact_pid" + ProcessHandle.current().pid()
+      val dst = src + "_compact" + WarmStores.pidTag
       compactBandIndex(s, src, dst)
       incrementalMinhashPairs(
           s, docs.filter(pmod(col("doc_id"), lit(5)) === 0), dst, threshold = 0.7)

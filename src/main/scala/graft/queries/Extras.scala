@@ -23,15 +23,13 @@ object Extras {
     * the driver replays it in-process with the Verify pid's file still on
     * disk, so the readback and DuckDB always see the same bytes.
     */
-  private val q46Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q46_pid${ProcessHandle.current().pid()}"
+  private val q46Dir: String = WarmStores.pidDir("q46")
 
   /** q189's pid-scoped store-row dump root (the q183 convention): each
     * media store family's doc-key rows dump here and BOTH engines run
     * the residual-count audit over the same readback.
     */
-  private val q189Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q189_pid${ProcessHandle.current().pid()}"
+  private val q189Dir: String = WarmStores.pidDir("q189")
 
   /** The audit families q189 dumps, in the exact store-name vocabulary
     * [[graft.pipeline.Forget.families]] emits for a media-only config
@@ -45,18 +43,15 @@ object Extras {
     * folds over the readback and DuckDB replays the fold via the
     * recursive CC CTE over the identical edge rows.
     */
-  private val q191Dir: String =
-    s"${sys.props("java.io.tmpdir")}/graft_q191_pid${ProcessHandle.current().pid()}"
+  private val q191Dir: String = WarmStores.pidDir("q191")
 
   /** Per-query pid-scoped dump roots for the media incremental trio's
     * dump-readback oracles (index rows + batch hash rows; video adds the
     * vcounts denominators).
     */
-  private def mediaDumpDir(q: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${q}_pid${ProcessHandle.current().pid()}"
-  private val q185Dir = mediaDumpDir("q185")
-  private val q186Dir = mediaDumpDir("q186")
-  private val q187Dir = mediaDumpDir("q187")
+  private val q185Dir = WarmStores.pidDir("q185")
+  private val q186Dir = WarmStores.pidDir("q186")
+  private val q187Dir = WarmStores.pidDir("q187")
 
   /** q192's pid-scoped dump root: the warm store assignment + the
     * batch's union edge set, so DuckDB replays the contracted merge as a
@@ -64,13 +59,13 @@ object Extras {
     * the q110 contraction argument made driver-checkable without
     * replaying any modality kernel.
     */
-  private val q192Dir = mediaDumpDir("q192")
+  private val q192Dir = WarmStores.pidDir("q192")
 
   /** q196's pid-scoped dump root: (artifact, doc_id, sig) rows for every
     * cross-modal store arm; both engines replay the dup/orphan reconcile
     * over the identical readback (q195's shape at the media tier).
     */
-  private val q196Dir = mediaDumpDir("q196")
+  private val q196Dir = WarmStores.pidDir("q196")
 
   /** The q185/q186 oracle: DuckDB recomputes the batch's 4×16-bit bands
     * off the dumped (doc_id, dh) rows — `>>` is arithmetic (sign-
@@ -1042,23 +1037,16 @@ object Extras {
   private def fullModalIndexesFor(
       s: org.apache.spark.sql.SparkSession,
       docs: DataFrame,
-      dir: String): (String, String, String, String) = synchronized {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_xmfull_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val text = s"$root/text"
-    val img = s"$root/img"
-    val aud = s"$root/aud"
-    val vid = s"$root/vid"
-    if (!WarmStores.ready(text, "shingles/_SUCCESS"))
-      DedupStore.persistBandIndex(docs, text)
-    if (!WarmStores.ready(img, "dhbands/_SUCCESS"))
-      Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), img)
-    if (!WarmStores.ready(aud, "dhbands/_SUCCESS"))
-      Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), aud)
-    if (!WarmStores.ready(vid, "dhbands/_SUCCESS", "vcounts/_SUCCESS"))
-      Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), vid)
-    (text, img, aud, vid)
+      dir: String): (String, String, String, String) = {
+    val root = WarmStores.keyed(s, "xmfull", dir)
+    (WarmStores.warm(s, s"$root/text", "shingles/_SUCCESS")(
+      DedupStore.persistBandIndex(docs, _)),
+     WarmStores.warm(s, s"$root/img", "dhbands/_SUCCESS")(
+       Multimodal.persistDhashIndex(Multimodal.imagePayloads(docs), _)),
+     WarmStores.warm(s, s"$root/aud", "dhbands/_SUCCESS")(
+       Multimodal.persistAudioIndex(Multimodal.audioPayloads(docs), _)),
+     WarmStores.warm(s, s"$root/vid", "dhbands/_SUCCESS", "vcounts/_SUCCESS")(
+       Multimodal.persistVideoIndex(Multimodal.videoPayloads(docs), _)))
   }
 
   /** q196: the media-store SYNC gauge over a dumped (artifact, doc_id,
@@ -1144,25 +1132,16 @@ object Extras {
       .orderBy("doc_id")
 
   /** Warm tombstone ledger for q190 (the %97 forgotten set, the q172
-    * takedown convention): content-keyed reuse ([[WarmStores.dirTag]]);
-    * a fresh build is delete-then-append, because the ledger is
-    * append-only by design and a repeat build must not accumulate.
+    * takedown convention): content-keyed reuse ([[WarmStores.dirTag]]).
+    * The ledger is append-only by design; each build appends into a
+    * fresh side directory, so a repeat build never accumulates.
     */
   private def tombstoneLedgerFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_tombs_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    WarmStores.warm(s, WarmStores.keyed(s, "tombs", dir))(
       graft.pipeline.Forget.appendTombstones(
         Tables(s, dir, "documents")
-          .filter(col("doc_id") % 97 === 0).select(col("doc_id")), path)
-    }
-    path
-  }
+          .filter(col("doc_id") % 97 === 0).select(col("doc_id")), _))
 
   /** Warm cross-modal assignment store over the %5<>0 store corpus (the
     * DedupStore.bandIndexFor convention, content-keyed via
@@ -1170,44 +1149,33 @@ object Extras {
     * registers the PROBE form; the store-rewriting absorb/retract
     * lifecycle is CrossModalSpec's.
     */
-  private def crossModalIndexFor(
-      corpus: DataFrame, dir: String, tag: String): String =
-    synchronized {
-      // `xmidx4`: the arm-set version is part of the path — a store
-      // persisted under the three-arm union must never warm-serve the
-      // four-arm (video-enabled) readers
-      val path = s"${sys.props("java.io.tmpdir")}/graft_xmidx4_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" + tag +
-        WarmStores.dirTag(corpus.sparkSession, dir, "documents")
-      val reusable = WarmStores.ready(path, "assignment/_SUCCESS")
-      if (!reusable) graft.pipeline.CrossModal.persist(corpus, path)
-      path
-    }
+  private def crossModalIndexFor(corpus: DataFrame, dir: String, tag: String): String = {
+    val s = corpus.sparkSession
+    // `xmidx4`: the arm-set version is part of the path — a store
+    // persisted under the three-arm union must never warm-serve the
+    // four-arm (video-enabled) readers
+    WarmStores.warm(s, WarmStores.keyed(s, "xmidx4", dir, "_" + tag), "assignment/_SUCCESS")(
+      graft.pipeline.CrossModal.persist(corpus, _))
+  }
 
   /** Warm-reuse policy for the image dHash index (the DedupStore.bandIndexFor
     * convention, content-keyed via [[WarmStores.dirTag]] — media payloads
     * derive deterministically from the documents table).
     */
-  private def dhashIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_dhidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "dhbands/_SUCCESS")
-    if (!reusable) Multimodal.persistDhashIndex(media, path)
-    path
+  private def dhashIndexFor(media: DataFrame, dir: String): String = {
+    val s = media.sparkSession
+    WarmStores.warm(s, WarmStores.keyed(s, "dhidx", dir), "dhbands/_SUCCESS")(
+      Multimodal.persistDhashIndex(media, _))
   }
 
   /** [[dhashIndexFor]]'s warm-reuse policy for the audio fingerprint
     * index (separate artifact root — the two kernels must never serve
     * each other's bands).
     */
-  private def audioIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_afidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path, "dhbands/_SUCCESS")
-    if (!reusable) Multimodal.persistAudioIndex(media, path)
-    path
+  private def audioIndexFor(media: DataFrame, dir: String): String = {
+    val s = media.sparkSession
+    WarmStores.warm(s, WarmStores.keyed(s, "afidx", dir), "dhbands/_SUCCESS")(
+      Multimodal.persistAudioIndex(media, _))
   }
 
   /** Warm-reuse policy for the video frame index (q187): both artifacts
@@ -1215,13 +1183,9 @@ object Extras {
     * index rebuilds (a crash between the two writes must not serve a
     * denominator-less index).
     */
-  private def videoIndexFor(media: DataFrame, dir: String): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_vfidx_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(media.sparkSession, dir, "documents")
-    val reusable =
-      WarmStores.ready(path, "dhbands/_SUCCESS", "vcounts/_SUCCESS")
-    if (!reusable) Multimodal.persistVideoIndex(media, path)
-    path
+  private def videoIndexFor(media: DataFrame, dir: String): String = {
+    val s = media.sparkSession
+    WarmStores.warm(s, WarmStores.keyed(s, "vfidx", dir), "dhbands/_SUCCESS", "vcounts/_SUCCESS")(
+      Multimodal.persistVideoIndex(media, _))
   }
 }

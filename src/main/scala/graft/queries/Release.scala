@@ -534,6 +534,17 @@ object Release {
       |      'added' AS status
       |    FROM d1 JOIN a1 ON a1.source = d1.source AND a1.pack_id = d1.pack_id))""".stripMargin
 
+  /** [[incrementalReleaseFor]]'s sibling for q164's epoch-1 release
+    * manifest — q172's release arm probes the stored manifest (the
+    * production shape: a locator reads stores, it does not re-release),
+    * while q164's own registration keeps measuring the derivation.
+    */
+  private[queries] def releaseManifestFor(
+      s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(WarmStores.warmParquet(s, WarmStores.keyed(s, "relman", dir))(
+      releaseManifest(Tables(s, dir, "documents"))))
+
   /** Warm-reusable PERSISTED incremental-release manifest — the q158
     * probe-form precedent applied to the release family: q169's
     * derivation runs once per corpus dir and lands as a never-mutated
@@ -551,38 +562,11 @@ object Release {
     * per call (q171/q176/q177 at 46-82x on 10x data) under the old
     * testdata-only policy.
     */
-  /** [[incrementalReleaseFor]]'s sibling for q164's epoch-1 release
-    * manifest — q172's release arm probes the stored manifest (the
-    * production shape: a locator reads stores, it does not re-release),
-    * while q164's own registration keeps measuring the derivation.
-    */
-  private[queries] def releaseManifestFor(
-      s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_relman_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      releaseManifest(Tables(s, dir, "documents")).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    s.read.parquet(path)
-  }
-
   private def incrementalReleaseFor(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_increl_" +
-      java.lang.Integer.toHexString(dir.hashCode) +
-      WarmStores.dirTag(s, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      incrementalRelease(s, dir).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    s.read.parquet(path)
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(WarmStores.warmParquet(s, WarmStores.keyed(s, "increl", dir))(
+      incrementalRelease(s, dir)))
 
   /** q171: un-absorb the day-2 batch from an incremental release. The
     * absorb never rewrote a published file (additions are NEW tail
@@ -781,18 +765,12 @@ object Release {
       base: org.apache.spark.sql.DataFrame,
       batch: org.apache.spark.sql.DataFrame,
       dir: String,
-      packTokens: Int = 512): String = synchronized {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_packabs_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_p$packTokens" +
-      WarmStores.dirTag(base.sparkSession, dir, "documents")
-    val reusable = WarmStores.ready(path)
-    if (!reusable) {
+      packTokens: Int = 512): String = {
+    val s = base.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "packabs", dir, s"_p$packTokens")) {
       val m0 = packManifest(base, packTokens)
       m0.unionByName(packSpans(batch, packResumeOffsets(m0, packTokens), packTokens))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
     }
-    path
   }
 
   private[graft] def retractedPackRows(
@@ -887,16 +865,10 @@ object Release {
         |    AS crosses_boundary
         |FROM c ORDER BY source, pack_id, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val storePath = s"${sys.props("java.io.tmpdir")}/graft_packstore_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_p512_pid" +
-        ProcessHandle.current().pid()
-      Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storePath, "_SUCCESS"))) {
-          packManifest(docs.filter(col("doc_id") % 7 =!= 0)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
-        }
-      }
+      val storePath = WarmStores.warm(s,
+          WarmStores.pathFor("packstore", dir, "_p512" + WarmStores.pidTag))(
+        packManifest(docs.filter(col("doc_id") % 7 =!= 0)).write
+          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
       packManifestAppend(
         s.read.parquet(storePath), docs.filter(col("doc_id") % 7 === 0))
     },
@@ -1000,16 +972,10 @@ object Release {
         |  CAST(oversize AS INT) AS oversize
         |FROM r ORDER BY source, bucket_slot, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val storePath = s"${sys.props("java.io.tmpdir")}/graft_bpackstore_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_b512_pid" +
-        ProcessHandle.current().pid()
-      Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(storePath, "_SUCCESS"))) {
-          boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(storePath)
-        }
-      }
+      val storePath = WarmStores.warm(s,
+          WarmStores.pathFor("bpackstore", dir, "_b512" + WarmStores.pidTag))(
+        boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
+          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
       boundaryPackAppend(
         s.read.parquet(storePath), docs.filter(col("doc_id") % 7 === 0))
     },
@@ -1042,9 +1008,7 @@ object Release {
         |FROM r ORDER BY source, bucket_slot, doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables(s, dir, "documents")
       val batch = docs.filter(col("doc_id") % 7 === 0)
-      val path = s"${sys.props("java.io.tmpdir")}/graft_bpackretract_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_b512_pid" +
-        ProcessHandle.current().pid()
+      val path = WarmStores.pathFor("bpackretract", dir, "_b512" + WarmStores.pidTag)
       Curation.synchronized {
         boundaryPack(docs.filter(col("doc_id") % 7 =!= 0)).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
@@ -1520,9 +1484,7 @@ object Release {
       // path would race — one deleting files the other is reading for its
       // manifest. The pid token isolates them; within a process, calls are
       // sequential and the rewrite is deterministic.
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_p512s2048_pid" +
-        ProcessHandle.current().pid()
+      val out = WarmStores.pathFor("shards", dir, "_p512s2048" + WarmStores.pidTag)
       val epochDir = graft.ops.ShardExport.write(
         Tables(s, dir, "documents"), out, epoch = 1, packTokens = 512, shardTokens = 2048)
       graft.ops.ShardExport.manifest(s, epochDir)
@@ -1546,23 +1508,18 @@ object Release {
         "reconciled against the stored manifest, status per shard",
       s"""SELECT shard_id, 'ok' AS status, n_seqs, n_docs, n_tokens, content_hash
          |FROM ($ShardManifestSelectSql) m ORDER BY shard_id""".stripMargin) { (s, dir) =>
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_audit_p512s2048_pid" +
-        ProcessHandle.current().pid()
-      val epochDir = s"$out/epoch=1"
-      val manifestStore = s"$out/manifest_store"
-      Curation.synchronized {
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(manifestStore, "_SUCCESS"))) {
-          graft.ops.ShardExport.write(
-            Tables(s, dir, "documents"), out, epoch = 1,
-            packTokens = 512, shardTokens = 2048)
-          graft.ops.ShardExport.manifest(s, epochDir).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(manifestStore)
-        }
+      val out = WarmStores.warm(s,
+          WarmStores.pathFor("shards", dir, "_audit_p512s2048" + WarmStores.pidTag),
+          "manifest_store/_SUCCESS") { o =>
+        val epochDir = graft.ops.ShardExport.write(
+          Tables(s, dir, "documents"), o, epoch = 1,
+          packTokens = 512, shardTokens = 2048)
+        graft.ops.ShardExport.manifest(s, epochDir).write
+          .mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$o/manifest_store")
       }
-      graft.ops.ShardExport.audit(s, epochDir, s.read.parquet(manifestStore))
+      graft.ops.ShardExport.audit(
+        s, s"$out/epoch=1", s.read.parquet(s"$out/manifest_store"))
     },
 
     // INCREMENTAL export ([[graft.ops.ShardExport.append]]): the daily
@@ -1641,40 +1598,35 @@ object Release {
       // is the honest day-boundary work: reset any prior append, append
       // the batch, manifest. Output is deterministic either way (the
       // append re-deals identically over the identical base).
-      val out = s"${sys.props("java.io.tmpdir")}/graft_shards_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_incr_p512s2048_pid" +
-        ProcessHandle.current().pid()
       val docs = Tables(s, dir, "documents")
-      val marker = java.nio.file.Paths.get(out, "_BASE_MAX")
-      val baseManifestPath = s"$out/base_manifest"
+      val out = WarmStores.warm(s,
+          WarmStores.pathFor("shards", dir, "_incr_p512s2048" + WarmStores.pidTag),
+          "_BASE_MAX") { o =>
+        val epochDir = graft.ops.ShardExport.write(
+          docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), o,
+          epoch = 1, packTokens = 512, shardTokens = 2048)
+        val m = s.read.parquet(epochDir)
+          .agg(max(col("shard_id").cast("long"))).head.getLong(0)
+        // attest the published shards ONCE; their files are immutable
+        // under append (byte-stability spec-proved), so these rows are
+        // the artifact every later day reuses
+        graft.ops.ShardExport.manifest(s, epochDir)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$o/base_manifest")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(o, "_BASE_MAX"), m.toString)
+      }
       val epochDir = s"$out/epoch=1"
       val baseMax = Curation.synchronized {
-        if (java.nio.file.Files.exists(marker)) {
-          val m = java.nio.file.Files.readString(marker).trim.toLong
-          graft.ops.ShardExport.resetAppended(epochDir, m)
-          m
-        } else {
-          graft.ops.ShardExport.write(
-            docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), out,
-            epoch = 1, packTokens = 512, shardTokens = 2048)
-          val m = s.read.parquet(epochDir)
-            .agg(max(col("shard_id").cast("long"))).head.getLong(0)
-          // attest the published shards ONCE; their files are immutable
-          // under append (byte-stability spec-proved), so these rows are
-          // the artifact every later day reuses
-          graft.ops.ShardExport.manifest(s, epochDir)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(baseManifestPath)
-          java.nio.file.Files.writeString(marker, m.toString)
-          m
-        }
+        val m = java.nio.file.Files.readString(java.nio.file.Paths.get(out, "_BASE_MAX")).trim.toLong
+        graft.ops.ShardExport.resetAppended(epochDir, m)
+        m
       }
       require(baseMax >= 0, s"empty base export at $epochDir")
       graft.ops.ShardExport.append(s,
         docs.filter(pmod(col("doc_id"), lit(5)) === 0), epochDir,
         epoch = 1, packTokens = 512, shardTokens = 2048)
       graft.ops.ShardExport.manifestIncremental(s, epochDir,
-        s.read.parquet(baseManifestPath), baseMax)
+        s.read.parquet(s"$out/base_manifest"), baseMax)
     },
 
     // EPOCH REMAP audit ([[graft.ops.ShardExport.assignShards]]): shard

@@ -46,18 +46,16 @@ object Similarity {
     * BOTH engines score + rank the same readback — the driver replays the
     * oracle in-process with the Verify pid's files still on disk.
     */
-  private def annDumpDir(q: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${q}_pid${ProcessHandle.current().pid()}"
-  private val q38Dir = annDumpDir("q38")
-  private val q42Dir = annDumpDir("q42")
-  private val q56Dir = annDumpDir("q56")
-  private val q62Dir = annDumpDir("q62")
-  private val q71Dir = annDumpDir("q71")
-  private val q95Dir = annDumpDir("q95")
-  private val q117Dir = annDumpDir("q117")
-  private val q173Dir = annDumpDir("q173")
-  private val q193Dir = annDumpDir("q193")
-  private val q195Dir = annDumpDir("q195")
+  private val q38Dir = WarmStores.pidDir("q38")
+  private val q42Dir = WarmStores.pidDir("q42")
+  private val q56Dir = WarmStores.pidDir("q56")
+  private val q62Dir = WarmStores.pidDir("q62")
+  private val q71Dir = WarmStores.pidDir("q71")
+  private val q95Dir = WarmStores.pidDir("q95")
+  private val q117Dir = WarmStores.pidDir("q117")
+  private val q173Dir = WarmStores.pidDir("q173")
+  private val q193Dir = WarmStores.pidDir("q193")
+  private val q195Dir = WarmStores.pidDir("q195")
 
   /** The shared ANN dump-readback oracle: exact-cosine top-`k` over the
     * DUMPED candidate set — q36's oracle template with the corpus join
@@ -508,36 +506,16 @@ object Similarity {
       |GROUP BY i, j ORDER BY i, j""".stripMargin
 
   /** q194's persisted moment-sum store over the STORED corpus — the
-    * [[persistedIndex]] memoization rules (testdata-only reuse; a user
-    * dir rebuilds per call). The path carries the quantization-scheme tag
+    * content-keyed warm reuse of every [[WarmStores]] artifact (keyed by
+    * the embeddings table). The path carries the quantization-scheme tag
     * (`tf12` = tie-free floor at scale 12) the same way persistedIndex
     * carries the centroid fingerprint: a store written under an older
     * scheme can never be served to a newer reader.
     */
-  private[graft] def momentStoreFor(corpus: DataFrame, dir: String): String = synchronized {
-    // content fingerprint, not just the dir name: one cheap corpus pass
-    // (order-insensitive sum of row hashes — far cheaper than the d²
-    // moment fold it memoizes) so a testdata dir whose embeddings change
-    // can never serve stale sums, and two processes over different data
-    // never share a path — the persistedIndex staleness rule
-    val fp = corpus.agg(
-        sum(xxhash64(col("vec_id"), col("embedding")).cast("decimal(38,0)")).as("h"),
-        count(lit(1)).as("n"))
-      .collect()(0)
-    val tag = java.lang.Long.toHexString(
-      fp.getDecimal(0).hashCode().toLong ^ (fp.getLong(1) * 1000003L))
-    val path = s"${sys.props("java.io.tmpdir")}/graft_moment_store_tf12_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" + tag
-    // the row-hash fp above keys the path by the corpus CONTENT, so a
-    // completed artifact at this path is valid for any dir — no
-    // dir-prefix gate needed (the WarmStores rationale)
-    val reusable =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))
-    if (!reusable)
-      momentSums(corpus, dim = 64).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(path)
-    path
+  private[graft] def momentStoreFor(corpus: DataFrame, dir: String): String = {
+    val s = corpus.sparkSession
+    WarmStores.warmParquet(s, WarmStores.keyed(s, "moment_store_tf12", dir, table = "embeddings"))(
+      momentSums(corpus, dim = 64))
   }
 
   val all: Map[String, Q] = Map(
@@ -1394,15 +1372,11 @@ object Similarity {
     * declarative fit registered — it MEASURES the fit, and its oracle
     * replays the fit CTE.
     */
-  private val kmModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Array[Double])]]()
   private[graft] def kmeansModelFor(
       emb: DataFrame, dir: String,
       k: Int = 4, updateRounds: Int = 2): Seq[(Long, Array[Double])] =
-    kmModels.computeIfAbsent(
-      s"$dir:k$k:r$updateRounds" +
-        WarmStores.dirTag(emb.sparkSession, dir, "embeddings"),
-      _ => kmeansFit(emb, k, updateRounds))
+    WarmStores.model(emb.sparkSession, s"kmeans_k${k}_r$updateRounds", dir)(
+      kmeansFit(emb, k, updateRounds))
 
   /** q104: coverage audit — see the registration comment. Only ids cross
     * the anti-joins; the orphan count is a 1-row cross join (q73's V
@@ -1683,13 +1657,9 @@ object Similarity {
     * mid-session re-keys to a fresh fit instead of serving a stale
     * quantizer.
     */
-  private[graft] def modelFor(corpus: DataFrame, dir: String): graft.operators.IvfIndex.Model = {
-    def build() = graft.operators.IvfIndex.fit(
-      corpus.limit(2048).coalesce(1), k = 16, maxIter = 5)
-    models.computeIfAbsent(
-      dir + WarmStores.dirTag(corpus.sparkSession, dir, "embeddings"),
-      _ => build())
-  }
+  private[graft] def modelFor(corpus: DataFrame, dir: String): graft.operators.IvfIndex.Model =
+    WarmStores.model(corpus.sparkSession, "ivf", dir)(
+      graft.operators.IvfIndex.fit(corpus.limit(2048).coalesce(1), k = 16, maxIter = 5))
 
   /** One-time index materialization per (corpus dir, MODEL). Two stacked
     * staleness guards, because each covers what the other cannot:
@@ -1705,18 +1675,9 @@ object Similarity {
     * ⇒ same fingerprint ⇒ a completed warm index is reusable.
     */
   private[graft] def persistedIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assign(model, corpus), path, Seq("bucket"))
-    path
-  }
+      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String =
+    bucketStoreFor("ivf_index", centroidFp(model), corpus, dir)(
+      graft.operators.IvfIndex.assign(model, corpus))
 
   /** q193's persisted STORE-side index (the vec_id%5 != 0 stored corpus —
     * the house daily-batch convention): the [[persistedIndex]] artifact
@@ -1724,91 +1685,63 @@ object Similarity {
     * full-corpus index can never shadow it. Same staleness rules.
     */
   private[graft] def persistedStoreIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_store_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assign(model, corpus), path, Seq("bucket"))
-    path
-  }
+      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String =
+    bucketStoreFor("ivf_index_store", centroidFp(model), corpus, dir)(
+      graft.operators.IvfIndex.assign(model, corpus))
 
   /** The int8 twin of [[persistedIndex]] — same path-by-fingerprint and
-    * testdata-only-reuse staleness rules (see there), distinct path suffix
-    * so the two artifacts can never shadow each other.
+    * content-keyed staleness rules (see there), distinct path suffix so
+    * the two artifacts can never shadow each other.
     */
   private[graft] def persistedQuantizedIndex(
-      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String = synchronized {
-    val fp = java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_q8_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      graft.ops.Bucketing.writePartitioned(
-        graft.operators.IvfIndex.assignQuantized(model, corpus), path, Seq("bucket"))
-    path
+      model: graft.operators.IvfIndex.Model, corpus: DataFrame, dir: String): String =
+    bucketStoreFor("ivf_index_q8", centroidFp(model), corpus, dir)(
+      graft.operators.IvfIndex.assignQuantized(model, corpus))
+
+  private def centroidFp(model: graft.operators.IvfIndex.Model): Int =
+    java.util.Arrays.deepHashCode(model.centroids.asInstanceOf[Array[AnyRef]])
+
+  /** The bucket-partitioned vector-index artifact shared by the persisted
+    * IVF/PQ indexes: keyed by the model fingerprint `fp` and the
+    * embeddings content.
+    */
+  private def bucketStoreFor(kind: String, fp: Int, corpus: DataFrame, dir: String)(
+      rows: => DataFrame): String = {
+    val s = corpus.sparkSession
+    WarmStores.warm(s, WarmStores.keyed(s, kind, dir,
+        "_" + java.lang.Integer.toHexString(fp), table = "embeddings"))(
+      graft.ops.Bucketing.writePartitioned(rows, _, Seq("bucket")))
   }
 
   /** q71's coarse quantizer: FEWER, therefore larger, cells than the ANN
     * model (k=8 vs 16) because dedup recall needs near-dup pairs to
     * CO-OCCUR in a cell, a stricter ask than a query finding most of its
-    * top-k. Same memoization/staleness policy as [[modelFor]] (cache only
-    * the read-only testdata dirs), under a distinct cache key so the two
-    * models can never shadow each other.
+    * top-k. Same content-keyed memoization as [[modelFor]], under a
+    * distinct kind so the two models can never shadow each other.
     */
-  private[graft] def dedupModelFor(corpus: DataFrame, dir: String): graft.operators.IvfIndex.Model = {
-    def build() = graft.operators.IvfIndex.fit(
-      corpus.limit(2048).coalesce(1), k = 8, maxIter = 10)
-    models.computeIfAbsent(
-      "dedup:" + dir + WarmStores.dirTag(corpus.sparkSession, dir, "embeddings"),
-      _ => build())
-  }
+  private[graft] def dedupModelFor(corpus: DataFrame, dir: String): graft.operators.IvfIndex.Model =
+    WarmStores.model(corpus.sparkSession, "ivf_dedup", dir)(
+      graft.operators.IvfIndex.fit(corpus.limit(2048).coalesce(1), k = 8, maxIter = 10))
 
   /** q117's code table — [[persistedIndex]]'s path-by-fingerprint and
-    * testdata-only-reuse staleness rules (see there); the fingerprint
-    * covers BOTH models (coarse centroids + PQ codebooks), so changing
-    * either retargets the path and rebuilds.
+    * content-keyed staleness rules (see there); the fingerprint covers
+    * BOTH models (coarse centroids + PQ codebooks), so changing either
+    * retargets the path and rebuilds.
     */
   private[graft] def persistedPqIndex(
       ivf: graft.operators.IvfIndex.Model,
       pq: graft.operators.PqIndex.Model,
       corpus: DataFrame,
-      dir: String): String = synchronized {
-    val fp = 31 * java.util.Arrays.deepHashCode(
-      ivf.centroids.asInstanceOf[Array[AnyRef]]) +
-      java.util.Arrays.deepHashCode(pq.codebooks.asInstanceOf[Array[AnyRef]])
-    val path = s"${sys.props("java.io.tmpdir")}/graft_ivf_index_pq_" +
-      java.lang.Integer.toHexString(dir.hashCode) + "_" +
-      java.lang.Integer.toHexString(fp) +
-      WarmStores.dirTag(corpus.sparkSession, dir, "embeddings")
-    val reusable = WarmStores.ready(path)
-    if (!reusable)
-      graft.ops.Bucketing.writePartitioned(
-        graft.operators.PqIndex.assign(ivf, pq, corpus), path, Seq("bucket"))
-    path
-  }
+      dir: String): String =
+    bucketStoreFor("ivf_index_pq",
+        31 * centroidFp(ivf) +
+          java.util.Arrays.deepHashCode(pq.codebooks.asInstanceOf[Array[AnyRef]]),
+        corpus, dir)(graft.operators.PqIndex.assign(ivf, pq, corpus))
 
-  /** q117's PQ codebooks — [[modelFor]]'s memoization/staleness policy
-    * (driver-bounded deterministic fit; cache only read-only testdata
-    * dirs), separate map because the model type differs.
+  /** q117's PQ codebooks — [[modelFor]]'s content-keyed memoization of a
+    * bounded deterministic fit.
     */
-  private[graft] def pqModelFor(corpus: DataFrame, dir: String): graft.operators.PqIndex.Model = {
-    def build() = graft.operators.PqIndex.fit(
-      corpus.limit(2048).coalesce(1), m = 16, numCodes = 16, maxIter = 10)
-    pqModels.computeIfAbsent(
-      dir + WarmStores.dirTag(corpus.sparkSession, dir, "embeddings"),
-      _ => build())
-  }
-
-  private val models =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.IvfIndex.Model]()
-
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.PqIndex.Model]()
+  private[graft] def pqModelFor(corpus: DataFrame, dir: String): graft.operators.PqIndex.Model =
+    WarmStores.model(corpus.sparkSession, "pq", dir)(
+      graft.operators.PqIndex.fit(corpus.limit(2048).coalesce(1), m = 16, numCodes = 16, maxIter = 10))
 }

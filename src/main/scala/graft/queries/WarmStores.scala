@@ -1,41 +1,59 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Content-keyed warm-store policy, shared by every persisted-artifact
-  * helper in the query registry (band/exact/component indexes, the n-gram
-  * and histogram stores, the release-manifest chain, the media and
-  * cross-modal index families, the IVF/PQ vector indexes).
+/** The one warm-artifact primitive behind every persisted store and
+  * fitted model the query registry reuses across calls (band/exact/
+  * component indexes, the n-gram and histogram stores, the release
+  * manifests, the media and cross-modal index families, the IVF/PQ vector
+  * indexes, the moment store; the IVF/PQ/k-means models).
   *
-  * History: these helpers originally allowed cross-call reuse ONLY for
-  * the read-only driver testdata dirs — any other dir rebuilt its store
-  * on every invocation, because a user dir rewritten mid-session must
-  * never serve a stale artifact. Correct, but it made the REGISTERED
-  * query forms recompute corpus-scale upstream chains per call on any
-  * non-testdata corpus: the round-15 sf1 rehearsal measured the
-  * takedown/forget tier at 46-82x on 10x data purely from per-invocation
-  * chain rebuilds (q171/q176/q177 re-deriving the ~24 s incremental
-  * release, q188 re-building four media store families), while the
-  * probes themselves are O(batch). At 100 TB a store that cannot be
-  * warm-served is not a store.
+  * Location: `<tmpdir>/graft_<kind>_<hex(dir.hashCode)><key>` plus the
+  * [[dirTag]] content tag of the tables the artifact is a function of.
+  * The tag makes reuse safe for any dir: a rewritten corpus re-keys to a
+  * fresh path instead of being trusted, and two dirs with different bytes
+  * never share an artifact. The shipped testdata is immutable by contract
+  * and keeps the constant (empty) tag, so its paths are the historical
+  * ones.
   *
-  * The fix is the [[Similarity.momentStoreFor]] staleness rule
-  * generalized: key the artifact path by the CONTENT that built it, then
-  * reuse becomes safe for any dir. For non-testdata dirs the tag is a
-  * hash of every underlying parquet file's (name, size, mtime) for the
-  * input tables — O(file-listing), no data scan — so a rewritten corpus
-  * re-keys to a fresh path instead of being trusted, and two dirs with
-  * different bytes can never share an artifact. The driver testdata is
-  * immutable by contract and keeps the historical constant (empty) tag:
-  * paths, I/O, and bench behavior there are byte-identical to the old
-  * policy.
+  * Readiness is [[graft.ops.StoreSwap.committed]] over the artifact's
+  * markers; with the tag in the path, existence IS validity. [[warm]]
+  * holds one lock across that check and the build, and builds into a side
+  * directory that is renamed onto the path only once complete — a crashed,
+  * failed or concurrent build is never served.
   */
-private[queries] object WarmStores {
+private[graft] object WarmStores {
+
+  private def tmp: String = sys.props("java.io.tmpdir")
+
+  /** `_pid<pid>`: the suffix that scopes an artifact to this process. */
+  val pidTag: String = "_pid" + ProcessHandle.current().pid()
+
+  /** `<tmpdir>/graft_<name>_pid<pid>` — a per-process root (dump-readback
+    * oracle dumps, artifacts a query rewrites on every call), so two JVMs
+    * over one tmpdir never race on it.
+    */
+  def pidDir(name: String): String = s"$tmp/graft_$name$pidTag"
+
+  /** `<tmpdir>/graft_<kind>_<hex(dir.hashCode)><key>`: an artifact's
+    * location before its content tag.
+    */
+  def pathFor(kind: String, dir: String, key: String = ""): String =
+    s"$tmp/graft_${kind}_" + java.lang.Integer.toHexString(dir.hashCode) + key
+
+  /** [[pathFor]] keyed by the content of `dir`'s `table`. */
+  def keyed(
+      s: SparkSession, kind: String, dir: String, key: String = "",
+      table: String = "documents"): String =
+    pathFor(kind, dir, key) + dirTag(s, dir, table)
 
   /** Content tag for `dir`, derived from the named top-level tables
-    * (e.g. "documents", "embeddings"). "" for the driver testdata
-    * (immutable; zero I/O). A missing table contributes nothing —
-    * callers name the tables their store is a function of.
+    * (e.g. "documents", "embeddings"): a hash of every underlying parquet
+    * file's (name, size, mtime) — O(file-listing), no data scan. "" for
+    * the shipped testdata (immutable; zero I/O). A missing table
+    * contributes nothing — callers name the tables their store is a
+    * function of.
     */
   def dirTag(s: SparkSession, dir: String, tables: String*): String =
     if (dir.startsWith("/root/testdata")) ""
@@ -43,7 +61,7 @@ private[queries] object WarmStores {
       val conf = s.sparkContext.hadoopConfiguration
       var acc = 1125899906842597L
       tables.sorted.foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+        val p = new Path(s"$dir/$t.parquet")
         val fs = p.getFileSystem(conf)
         if (fs.exists(p)) {
           val it = fs.listFiles(p, true)
@@ -58,12 +76,66 @@ private[queries] object WarmStores {
       "_" + java.lang.Long.toHexString(acc)
     }
 
-  /** The reuse test every helper shares: every named success marker
-    * exists under the content-keyed `path`. With the tag in the path,
-    * existence IS validity — no dir-prefix check remains.
+  /** Serve-or-build the artifact at `path`: ready when every marker
+    * (relative to `path`; `_SUCCESS` when none is named) exists. Otherwise
+    * `build` writes into `<path>.building_pid<pid>`, which is then
+    * published:
+    *   - a top-level marker means the directory IS the artifact: it
+    *     replaces `path` whole, so no stale file of an earlier partial
+    *     build survives;
+    *   - markers under subdirectories name sub-artifacts of a shared root
+    *     (a band index's bands/shingles beside its `exact_fp` and
+    *     manifests): each built child replaces its namesake and the
+    *     siblings stay, marker-bearing children last, so readiness flips
+    *     only with the final rename.
+    * A build that throws leaves only its side directory, which is dropped.
     */
-  def ready(path: String, markers: String*): Boolean = {
-    val ms = if (markers.isEmpty) Seq("_SUCCESS") else markers
-    ms.forall(m => java.nio.file.Files.exists(java.nio.file.Paths.get(path, m)))
+  def warm(s: SparkSession, path: String, markers: String*)(build: String => Unit): String =
+    synchronized {
+      if (!graft.ops.StoreSwap.committed(s, path, markers: _*)) {
+        val side = new Path(path + ".building" + pidTag)
+        val fs = side.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.delete(side, true)
+        try build(side.toString)
+        catch { case e: Throwable => fs.delete(side, true); throw e }
+        // another process may have published the same content meanwhile
+        if (graft.ops.StoreSwap.committed(s, path, markers: _*)) fs.delete(side, true)
+        else publish(fs, side, new Path(path), markers)
+      }
+      path
+    }
+
+  /** [[warm]] for an artifact that is one zstd parquet frame. */
+  def warmParquet(s: SparkSession, path: String)(df: => DataFrame): String =
+    warm(s, path)(df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("compression", "zstd").parquet(_))
+
+  private def publish(fs: FileSystem, side: Path, path: Path, markers: Seq[String]): Unit = {
+    def move(from: Path, to: Path): Unit = {
+      fs.delete(to, true)
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"warm store: could not publish $from at $to")
+    }
+    if (markers.isEmpty || markers.exists(!_.contains('/'))) move(side, path)
+    else {
+      val heads = markers.map(_.takeWhile(_ != '/')).toSet
+      fs.mkdirs(path)
+      fs.listStatus(side).map(_.getPath).sortBy(c => heads(c.getName))
+        .foreach(c => move(c, new Path(path, c.getName)))
+      fs.delete(side, true)
+    }
   }
+
+  private val models = scala.collection.mutable.HashMap.empty[String, AnyRef]
+
+  /** The in-memory twin of [[warm]] for fitted models (small,
+    * deterministic fits): one map, keyed by `kind`, `dir` and the content
+    * tag of `dir`'s embeddings, so a dir rewritten mid-session re-keys to
+    * a fresh fit instead of serving a stale model.
+    */
+  def model[M <: AnyRef](s: SparkSession, kind: String, dir: String)(fit: => M): M =
+    synchronized {
+      models.getOrElseUpdate(s"$kind:$dir" + dirTag(s, dir, "embeddings"), fit)
+        .asInstanceOf[M]
+    }
 }

@@ -110,4 +110,16 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter(col("component") =!= col("mn"))
     assert(badLabel.isEmpty, "every cluster must be labeled by its minimum member")
   }
+
+  test("a caller's localCheckpointed edge frame survives CC: a second run gets equal labels") {
+    import spark.implicits._
+    val nodes = (0L to 9L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L)).toDF("src", "dst")
+      .localCheckpoint()
+    def labels() = ConnectedComponents.run(nodes, edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val first = labels()
+    assert(first == labels(), "the second run over the same frame must agree")
+    assert(edges.count() == 4, "the caller's checkpoint blocks must stay readable")
+  }
 }
